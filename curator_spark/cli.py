@@ -42,10 +42,11 @@ def build_parser() -> argparse.ArgumentParser:
                         "meta)")
     p.add_argument("--incremental-state", action="store_true",
                    help="with --input-format table: print the slice "
-                        "lineage for this input table (one JSON object "
-                        "per slice: since/to/fingerprint/buckets_done/"
-                        "n_buckets/docs_seen/complete) and exit without "
-                        "running — metadata-only, no data read")
+                        "lineage for this input table as a single JSON "
+                        "array with one object per slice (since/to/"
+                        "fingerprint/buckets_done/n_buckets/docs_seen/"
+                        "complete) and exit without running — "
+                        "metadata-only, no data read")
     p.add_argument("--out", required=True, help="output snapshot-table root")
     p.add_argument("--cores", type=int,
                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))

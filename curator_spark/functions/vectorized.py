@@ -10,8 +10,7 @@ dense log-probability table and "scoring a batch" is pure numpy over the
 concatenated codepoint buffer of an Arrow batch — no per-row Python in
 the hot path.
 
-Both the Spark pandas UDFs (stages/langid.py, stages/perplexity.py) and
-the pure-pandas oracle (oracle/quality_oracle.py) call these functions,
+Both the Spark scorer UDF (stages/score.py) and the pure-pandas oracle (oracle/quality_oracle.py) call these functions,
 so float64 results are bit-identical between pipeline and oracle: same
 code, same summation order (np.cumsum is sequential).
 """

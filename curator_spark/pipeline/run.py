@@ -38,11 +38,9 @@ from curator_spark.pipeline import fsutil
 from curator_spark.pipeline.fingerprint import run_fingerprint
 from curator_spark.pipeline.catalog import CuratedTable, open_table
 from curator_spark.stages.decide import with_decision
-from curator_spark.stages.extract import extracted_text, with_extracted_text
-from curator_spark.stages.langid import with_langid
-from curator_spark.stages.perplexity import with_perplexity
+from curator_spark.stages.extract import extracted_text
 from curator_spark.stages.rules import with_rule_flags, with_rule_stats
-from curator_spark.stages.scrub import with_scrub
+from curator_spark.stages.score import with_scores
 
 OUT_COLS = [
     "url",
@@ -74,29 +72,16 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def quality_plan(
-    df: DataFrame,
-    cfg: QualityConfig,
-    text_col: str = "text",
-    fused: bool = True,
+    df: DataFrame, cfg: QualityConfig, text_col: str = "text"
 ) -> DataFrame:
-    """The full logical plan over a pages-shaped DataFrame (no I/O).
-
-    fused=True scores langid+perplexity+scrub in ONE ArrowEvalPython
-    node (one text round-trip per batch — see stages/score.py);
-    fused=False chains the per-stage UDFs (3 round-trips, same values).
-    """
+    """The full logical plan over a pages-shaped DataFrame (no I/O):
+    native rules, then langid + perplexity + scrub in ONE
+    ArrowEvalPython node (one text round-trip per batch — see
+    stages/score.py), then the keep/drop decision."""
     df = with_rule_stats(df, text_col)
     df = with_rule_flags(df, cfg)
-    if fused:
-        from curator_spark.stages.score import with_scores
-
-        df = with_scores(df, cfg, text_col)
-        df = with_decision(df, cfg)
-    else:
-        df = with_langid(df, cfg, text_col)
-        df = with_perplexity(df, text_col)
-        df = with_decision(df, cfg)
-        df = with_scrub(df, text_col)
+    df = with_scores(df, cfg, text_col)
+    df = with_decision(df, cfg)
     # dropped rows carry no scrubbed payload (they are not emitted downstream)
     df = df.withColumn(
         "scrubbed_text", F.when(F.col("keep"), F.col("scrubbed_text"))
@@ -104,28 +89,32 @@ def quality_plan(
     return df
 
 
-def staged_plan(
+def route_plan(
     pages: DataFrame, cfg: QualityConfig, from_html: bool = True
 ) -> DataFrame:
-    """The complete write-side plan over a bucketed pages DataFrame:
-    extraction, scoring, decision, quarantine routing, final
-    bucket repartition. One scan of the input, one shuffle —
-    tests/test_plans.py pins that shape.
+    """Scoring plus routing over a bucketed pages DataFrame, shared by
+    the batch write (staged_plan) and the stream (score_stream):
+    doc_text derivation (extracted from html, or the text column),
+    scoring, decision, and the keep/drop_reason overrides for failed
+    and previously-seen rows. Callers select OUT_COLS (plus any input
+    column they carry through).
 
-    Failed-extraction rows ride the same write under sentinel
-    bucket -1 (the scorers are pure and cheap on empty text, and
-    their outputs are overridden below); run() relocates that
-    partition to the quarantine dir before commit.
+    Failed rows (NULL or empty doc_text) ride the same plan under
+    sentinel bucket -1 (the scorers are pure and cheap on empty text,
+    and their outputs are overridden below) with
+    drop_reason='extract_failed'; run() relocates that partition to
+    the quarantine dir before commit.
 
     If the input carries a `dup_of_history` flag (run() with a
-    DedupIndex marks it pre-plan), flagged rows pay for NOTHING
-    downstream: their html is nulled before extraction and their
-    doc_text before scoring (the same cheap-on-empty property the
-    quarantine path relies on), and they emit as regular output rows
-    with keep=false, drop_reason='dup_of_history' in their normal
-    bucket — at 100 TB a re-crawl that is 80% previously-seen urls
-    skips 80% of extraction + model-scoring bytes while still
-    recording a per-url decision row.
+    DedupIndex marks it pre-plan; the stream joins it from the index
+    keys), flagged rows pay for NOTHING downstream: their doc_text is
+    NULL, so they skip extraction and score as empty text (the same
+    cheap-on-empty property the quarantine path relies on), and they
+    emit as regular output rows with keep=false,
+    drop_reason='dup_of_history' in their normal bucket — at 100 TB a
+    re-crawl that is 80% previously-seen urls skips 80% of extraction
+    + model-scoring bytes while still recording a per-url decision
+    row.
     """
     has_dup = "dup_of_history" in pages.columns
     dup = (
@@ -133,26 +122,15 @@ def staged_plan(
         if has_dup
         else F.lit(False)
     )
-    if from_html:
-        if has_dup:
-            # conditional INSIDE the doc_text expression: codegen
-            # evaluates the extraction branch per-row only for non-dup
-            # rows — no rewritten html projection (wrapping the binary
-            # column itself in a when() copied every page's html bytes
-            # through an extra Project, +58% on a zero-dup run)
-            pages = pages.withColumn(
-                "doc_text",
-                F.when(dup, F.lit(None).cast("string")).otherwise(
-                    extracted_text(F.col("html"))
-                ),
-            )
-        else:
-            pages = with_extracted_text(pages, out="doc_text")
-    else:
-        pages = pages.withColumn(
-            "doc_text",
-            F.when(dup, F.lit(None).cast("string")).otherwise(F.col("text")),
-        )
+    # conditional INSIDE the doc_text expression: codegen evaluates
+    # extraction per-row only for non-dup rows — no rewritten html
+    # projection (wrapping the binary column itself in a when() copied
+    # every page's html bytes through an extra Project, +58% on a
+    # zero-dup run); without the flag the optimizer folds the when()
+    text = extracted_text(F.col("html")) if from_html else F.col("text")
+    pages = pages.withColumn(
+        "doc_text", F.when(dup, F.lit(None).cast("string")).otherwise(text)
+    )
 
     failed_pred = (
         F.col("doc_text").isNull() | (F.col("doc_text") == "")
@@ -164,25 +142,28 @@ def staged_plan(
 
     scored = quality_plan(pages, cfg, text_col="doc_text")
     is_failed = F.col("bucket_id") == -1
-    # dup must be re-derivable post-select: OUT_COLS drops the flag
-    is_dup = (
-        F.coalesce(F.col("dup_of_history"), F.lit(False))
-        if has_dup
-        else F.lit(False)
-    )
-    scored = scored.select(*OUT_COLS, *(["dup_of_history"] if has_dup else []))
     return (
-        scored
-        .withColumn(
+        scored.withColumn(
             "keep",
-            F.when(is_failed | is_dup, F.lit(False)).otherwise(F.col("keep")),
+            F.when(is_failed | dup, F.lit(False)).otherwise(F.col("keep")),
         )
         .withColumn(
             "drop_reason",
             F.when(is_failed, F.lit("extract_failed"))
-            .when(is_dup, F.lit("dup_of_history"))
+            .when(dup, F.lit("dup_of_history"))
             .otherwise(F.col("drop_reason")),
         )
+    )
+
+
+def staged_plan(
+    pages: DataFrame, cfg: QualityConfig, from_html: bool = True
+) -> DataFrame:
+    """The complete write-side plan over a bucketed pages DataFrame:
+    route_plan, then the final bucket repartition. One scan of the
+    input, one shuffle — tests/test_plans.py pins that shape."""
+    return (
+        route_plan(pages, cfg, from_html)
         .select(*OUT_COLS)
         .repartition("bucket_id")
     )

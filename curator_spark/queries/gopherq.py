@@ -547,6 +547,11 @@ FROM scored
 #   - fraction of characters in DUPLICATED lines (2nd+ occurrences of
 #     an identical line, within the doc) >= 0.10,
 #   - fraction of lines shorter than 30 characters >= 0.67.
+# Two thresholds are re-tuned on purpose and differ from upstream
+# FineWeb: the duplicated-line character fraction (upstream 0.01) and
+# the short-line test (upstream counts lines of <= 30 characters; here
+# < FW_MIN_LINE_CHARS). They stay as they are because the pinned
+# oracle outputs depend on them.
 # The synthetic corpus has no newlines, so — exactly like
 # boilerplate_segments — a deterministic re-lining (non-overlapping
 # FW_LINE_WORDS-word windows) stands in for physical lines; the rule
@@ -562,9 +567,9 @@ FROM scored
 FW_LINE_WORDS = 10        # stand-in line = 10-word window (no newlines)
 FW_TERMINAL_CHARS = (".", "'", '"', "!", "?")  # FineWeb's stop set
 FW_MIN_PUNCT_LINE_FRAC = 0.12
-FW_MIN_LINE_CHARS = 30
+FW_MIN_LINE_CHARS = 30   # short line: < 30 chars (upstream: <= 30)
 FW_MAX_SHORT_LINE_FRAC = 0.67
-FW_MAX_DUP_LINE_CHAR_FRAC = 0.10
+FW_MAX_DUP_LINE_CHAR_FRAC = 0.10  # re-tuned (upstream: 0.01)
 
 
 def _fw_lines(ws: Column) -> Column:

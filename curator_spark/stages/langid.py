@@ -1,64 +1,15 @@
-"""Language-ID stage: Arrow-vectorized iterator pandas UDF.
-
-Spark-first restatement of the reference's offline batched scoring
-(reference: request_processor/offline/vllm_offline_request_processor.py
-:41-53,167-201): the model table is built/loaded ONCE per Python worker
-(module-global cache in functions/vectorized.py; `SPARK_LANGID_NPZ` env
-or SparkFiles path switches to a shipped .npz artifact for
-spark-submit --files), then every Arrow batch is scored in one numpy
-pass — no per-row Python.
-"""
+"""Language-ID stage: the `langid` output of the shared scorer
+(stages/score.py), which also resolves the model tables."""
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from curator_spark.config import QualityConfig
-from curator_spark.functions import vectorized as V
+from curator_spark.stages.score import _resolve_tables, with_scores
 
-
-def _resolve_tables(langs: tuple[str, ...]) -> tuple[np.ndarray, tuple[str, ...]]:
-    path = os.environ.get("SPARK_LANGID_NPZ", "")
-    if path:
-        try:
-            from pyspark.files import SparkFiles
-
-            cand = SparkFiles.get(os.path.basename(path))
-            if os.path.exists(cand):
-                path = cand
-        except Exception:
-            pass
-        table, _, art_langs = V.load_artifacts(path)
-        return table, art_langs
-    return V.get_langid_table(langs), langs
-
-
-def make_langid_udf(cfg: QualityConfig):
-    langs = cfg.langs
-
-    @pandas_udf("lang_pred string, lang_score double")
-    def langid_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        table, model_langs = _resolve_tables(langs)  # once per worker+task
-        lang_arr = np.array(model_langs, dtype=object)
-        for texts in it:
-            t = texts.fillna("").tolist()
-            pred_idx, conf = V.langid_scores(t, model_langs, table)
-            pred = np.where(pred_idx >= 0, lang_arr[np.maximum(pred_idx, 0)], "und")
-            yield pd.DataFrame({"lang_pred": pred, "lang_score": conf})
-
-    return langid_udf
+__all__ = ["_resolve_tables", "with_langid"]
 
 
 def with_langid(df: DataFrame, cfg: QualityConfig, text_col: str = "text") -> DataFrame:
-    udf = make_langid_udf(cfg)
-    df = df.withColumn("_lid", udf(F.col(text_col)))
-    return df.withColumn("lang_pred", F.col("_lid.lang_pred")).withColumn(
-        "lang_score", F.col("_lid.lang_score")
-    ).drop("_lid")
+    return with_scores(df, cfg, text_col, ("langid",))

@@ -1,30 +1,15 @@
-"""Perplexity stage: char-bigram LM scored in one numpy pass per batch.
-
-Same worker-level model caching pattern as langid (the reference's
-load-once offline scorer, vllm_offline_request_processor.py:41-53).
+"""Perplexity stage: the `perplexity` output of the shared scorer
+(stages/score.py) — char-bigram LM scored in one numpy pass per batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from curator_spark.functions import vectorized as V
-
-
-def make_perplexity_udf():
-    @pandas_udf("double")
-    def perplexity_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        lm = V.get_bigram_lm()  # built once per worker, cached across batches
-        for texts in it:
-            yield pd.Series(V.perplexities(texts.fillna("").tolist(), lm))
-
-    return perplexity_udf
+from curator_spark.config import DEFAULT_CONFIG
+from curator_spark.stages.score import with_scores
 
 
 def with_perplexity(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("perplexity", make_perplexity_udf()(F.col(text_col)))
+    # the LM does not depend on the config; any config scores alike
+    return with_scores(df, DEFAULT_CONFIG, text_col, ("perplexity",))

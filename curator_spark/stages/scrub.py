@@ -1,66 +1,20 @@
-"""PII/toxicity scrub stage: compiled-regex pandas UDF.
+"""PII/toxicity scrub stage: the `scrub` output of the shared scorer
+(stages/score.py).
 
-Rewrites `text` in place (emails → <EMAIL>, SSNs → <ID>, phones →
-<PHONE>, toxicity lexicon → <TOX>) and emits per-row scrub counters.
-The regex core lives in functions/scrub_core.py, shared byte-for-byte
-with the oracle (FIXTURES.md §2 invariant).
+Rewrites `text` (emails → <EMAIL>, SSNs → <ID>, phones → <PHONE>,
+toxicity lexicon → <TOX>) into `scrubbed_text` and emits per-row
+`scrub_counts`. The regex core lives in functions/scrub_core.py,
+shared byte-for-byte with the oracle (FIXTURES.md §2 invariant).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from curator_spark.functions.scrub_core import scrub_series
-
-_RET = (
-    "scrubbed_text string, emails long, ids long, phones long, toxic long"
-)
-
-
-def make_scrub_udf():
-    @pandas_udf(_RET)
-    def scrub_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for texts in it:
-            scrubbed, counts = scrub_series(texts)
-            # untouched rows (all counts zero <=> byte-identical text)
-            # return NULL; the JVM side coalesces the original column
-            # back in — same Arrow return-path compression as the
-            # fused scorer (stages/score.py). NULL-text rows
-            # NULL-propagate (NULL scrubbed + NULL counts) to match
-            # the DuckDB twin's regexp semantics — the JVM coalesce
-            # then restores the original NULL.
-            nulls = texts.isna().values
-            unchanged = (counts.sum(axis=1).values == 0) & ~nulls
-            keep2d = ~np.tile(nulls[:, None], (1, counts.shape[1]))
-            out = counts.where(keep2d).astype("Int64")
-            out.insert(0, "scrubbed_text", scrubbed.mask(unchanged | nulls, None))
-            yield out
-
-    return scrub_udf
+from curator_spark.config import DEFAULT_CONFIG
+from curator_spark.stages.score import with_scores
 
 
 def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
-    df = df.withColumn("_scrub", make_scrub_udf()(F.col(text_col)))
-    return (
-        df.withColumn(
-            "scrubbed_text",
-            F.coalesce(F.col("_scrub.scrubbed_text"), F.col(text_col)),
-        )
-        .withColumn(
-            "scrub_counts",
-            F.struct(
-                F.col("_scrub.emails").alias("emails"),
-                F.col("_scrub.ids").alias("ids"),
-                F.col("_scrub.phones").alias("phones"),
-                F.col("_scrub.toxic").alias("toxic"),
-            ),
-        )
-        .drop("_scrub")
-    )
+    # the scrub does not depend on the config; any config scrubs alike
+    return with_scores(df, DEFAULT_CONFIG, text_col, ("scrub",))

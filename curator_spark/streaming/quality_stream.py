@@ -3,9 +3,11 @@
 The reference is a batch system whose "streaming" is incremental file
 append + resume bookkeeping (reference: base_online_request_processor
 .py:609-631 — append one JSONL line per completed response; SURVEY
-§2.9). Spark restates that capability properly: the SAME logical plan
-(`quality_plan` — rules exprs + Arrow UDF stages + scrub, all
-stateless maps) runs unchanged under `readStream`, and the streaming
+§2.9). Spark restates that capability properly: the stream runs the
+batch route itself (`pipeline.run.route_plan` — doc_text derivation,
+rules exprs + the Arrow scorer, decision, and the quarantine and
+dup_of_history overrides, all stateless maps) under `readStream`, so a
+page gets the same decision row from either face; and the streaming
 engine's checkpoint (source offsets + file-sink transaction log)
 replaces the reference's completed-id resume scan: a killed run
 restarted with the same checkpoint processes each input file exactly
@@ -37,7 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from curator_spark.config import QualityConfig
 from curator_spark.engine.schema import PAGES
-from curator_spark.pipeline.run import OUT_COLS, quality_plan, with_bucket
+from curator_spark.pipeline.run import OUT_COLS, route_plan, with_bucket
 
 
 def history_key_table(spark: SparkSession, dedup_index) -> DataFrame | None:
@@ -83,7 +85,6 @@ def score_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.parquet(input_dir)
     pages = with_bucket(pages, cfg.n_buckets)
-    dup = F.lit(False)
     if history_keys is None:
         history_keys = history_key_table(spark, dedup_index)
     if history_keys is not None:
@@ -93,37 +94,7 @@ def score_stream(
             .withColumn("dup_of_history", F.col("dup_canonical").isNotNull())
             .drop("key", "dup_canonical")
         )
-        dup = F.col("dup_of_history")
-        pages = pages.withColumn(
-            "doc_text",
-            F.when(dup, F.lit(None).cast("string")).otherwise(F.col("text")),
-        )
-    else:
-        pages = pages.withColumn("doc_text", F.col("text"))
-    # batch parity: staged_plan routes NULL/empty text to the sentinel
-    # quarantine bucket with drop_reason='extract_failed'; without the
-    # same guard here a NULL-text page would be fillna('')-scored and
-    # labeled by whatever the scorers say about empty text — the
-    # streaming face must emit the identical decision.
-    failed_pred = (
-        F.col("doc_text").isNull() | (F.col("doc_text") == "")
-    ) & ~dup
-    pages = pages.withColumn(
-        "bucket_id",
-        F.when(failed_pred, F.lit(-1)).otherwise(F.col("bucket_id")),
-    )
-    scored = quality_plan(pages, cfg, text_col="doc_text")
-    is_failed = F.col("bucket_id") == -1
-    scored = scored.withColumn(
-        "keep",
-        F.when(is_failed | dup, F.lit(False)).otherwise(F.col("keep")),
-    ).withColumn(
-        "drop_reason",
-        F.when(is_failed, F.lit("extract_failed"))
-        .when(dup, F.lit("dup_of_history"))
-        .otherwise(F.col("drop_reason")),
-    )
-    return scored.select("warc_ts", *OUT_COLS)
+    return route_plan(pages, cfg, from_html=False).select("warc_ts", *OUT_COLS)
 
 
 def run_available_now(
@@ -169,20 +140,21 @@ def checkpoint_lineage(checkpoint_dir: str) -> str:
     import json as _json
     import os as _os
 
+    from py4j.protocol import Py4JError
+
     from curator_spark.pipeline import fsutil
 
     meta_file = checkpoint_dir.rstrip("/") + "/metadata"
     try:
         text = fsutil.read_text(None, meta_file)
-        if text is not None:
-            qid = _json.loads(text).get("id")
-            if qid:
-                return str(qid)
-    except Exception:
-        # broad on purpose: a truncated metadata file raises
-        # json.JSONDecodeError, a remote-FS hiccup raises a py4j
-        # error — any unreadable metadata must degrade to the path
-        # fallback, not kill the stream at its first micro-batch.
+        obj = _json.loads(text) if text is not None else None
+        if isinstance(obj, dict) and obj.get("id"):
+            return str(obj["id"])
+    except (OSError, ValueError, Py4JError):
+        # unreadable metadata (a local read error, a truncated file's
+        # json.JSONDecodeError or bad UTF-8, a remote-FS py4j error)
+        # must degrade to the path fallback, not kill the stream at
+        # its first micro-batch; anything else is a bug and propagates
         pass
     if fsutil.is_local_path(checkpoint_dir):
         return _os.path.abspath(checkpoint_dir)

@@ -188,7 +188,7 @@ def test_remote_stage_all_failed_cleans_up(spark, cfg, tmp_path):
     assert res2.cached and len(table.staged) == 1
 
 
-def test_checkpoint_lineage_file_scheme(spark, tmp_path):
+def test_checkpoint_lineage_file_scheme(spark, tmp_path, monkeypatch):
     """Remote checkpoints must resolve the persisted query id (plain
     open() could not read them, demoting every remote lineage to a
     path fallback), and the no-metadata fallback must be the URI
@@ -205,6 +205,18 @@ def test_checkpoint_lineage_file_scheme(spark, tmp_path):
     (ck / "metadata").write_text('{"id": "q-123"}')
     assert checkpoint_lineage(uri) == "q-123"
     assert checkpoint_lineage(str(ck)) == "q-123"  # local branch parity
+    # valid JSON that is not an object: path fallback, not a crash
+    (ck / "metadata").write_text("[1]")
+    assert checkpoint_lineage(uri) == uri
+    assert checkpoint_lineage(str(ck)) == str(ck)
+
+    # only unreadable-metadata errors fall back; a bug propagates
+    def broken(spark, path):
+        raise AttributeError("bug")
+
+    monkeypatch.setattr(fsutil, "read_text", broken)
+    with pytest.raises(AttributeError, match="bug"):
+        checkpoint_lineage(uri)
 
 
 def test_stream_pin_file_scheme(spark, tmp_path):

@@ -98,8 +98,10 @@ def test_merge_metas_default_unions_everything():
 
 
 def test_stream_null_text_matches_batch_quarantine(spark, tmp_path):
+    from curator_spark.pipeline.run import OUT_COLS, staged_plan, with_bucket
     from curator_spark.streaming.quality_stream import run_available_now
 
+    cfg = QualityConfig()
     pages = str(tmp_path / "pages")
     spark.createDataFrame(
         [
@@ -111,7 +113,7 @@ def test_stream_null_text_matches_batch_quarantine(spark, tmp_path):
         PAGES,
     ).write.parquet(pages)
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    run_available_now(spark, pages, out, ck, QualityConfig())
+    run_available_now(spark, pages, out, ck, cfg)
     got = {
         r["url"]: (r["keep"], r["drop_reason"])
         for r in spark.read.parquet(out).collect()
@@ -119,6 +121,13 @@ def test_stream_null_text_matches_batch_quarantine(spark, tmp_path):
     assert got["https://a.example/1"] == (False, "extract_failed")
     assert got["https://a.example/2"] == (False, "extract_failed")
     assert got["https://a.example/3"][1] != "extract_failed"
+    # the stream route equals the batch route on every output column
+    batch = staged_plan(
+        with_bucket(spark.read.parquet(pages), cfg.n_buckets), cfg,
+        from_html=False,
+    )
+    stream = spark.read.parquet(out).select(*OUT_COLS)
+    assert sorted(stream.collect()) == sorted(batch.select(*OUT_COLS).collect())
 
 
 def test_generate_pages_profile_does_not_mutate_shared_schema(spark):
